@@ -63,53 +63,31 @@ _SCOPED: list[DataFrame] = []
 _DEPTH: int = 0
 
 
-def _default_level() -> StorageLevel:
-    """Resolve the scoped-persist StorageLevel at CALL time from
-    ``$SPARK_GRAFT_PERSIST_LEVEL`` (default DISK_ONLY).  Values are
-    level-independent by construction — the knob exists so bench/one-shot
-    runs can trade the long-session RSS discipline (DISK_ONLY — see the
-    module docstring) for MEMORY_AND_DISK reread speed, and so the r6→r7
-    bench-regression A/B (VERDICT r6 #2) is a measurement, not a guess."""
-    import os
-
-    name = os.environ.get("SPARK_GRAFT_PERSIST_LEVEL", "DISK_ONLY")
-    return getattr(StorageLevel, name)
-
-
-def scoped_persist(df: DataFrame, eager: bool = True,
-                   level: StorageLevel | None = None
-                   ) -> DataFrame:
+def scoped_persist(df: DataFrame) -> DataFrame:
     """Persist ``df`` for the duration of the current registry query.
 
-    Eager by default (one ``count()`` job) so multi-branch consumers —
-    both sides of a self-join, a count and a max over the same frame —
-    are guaranteed to read materialized blocks instead of racing to
-    populate them.  Released by :func:`release_scoped` at the next
-    top-level registry call; until then it behaves exactly like
-    ``persist()``.
+    Eager (one ``count()`` job) so multi-branch consumers — both sides
+    of a self-join, a count and a max over the same frame — are
+    guaranteed to read materialized blocks instead of racing to populate
+    them.  Released by :func:`release_scoped` at the next top-level
+    registry call; until then it behaves exactly like ``persist()``.
 
-    DISK_ONLY by default: a JVM never hands heap high-water back to the
-    OS, so in a long shared session every MEMORY_* materialization
-    permanently raises process RSS even after release — the sweep-killer
-    observed in round 5.  These frames are KB–MB sized and re-read
-    within one query; the OS page cache serves them at near-RAM speed
-    without growing the heap.  Callers with a genuinely hot, large,
-    repeatedly-scanned frame can pass MEMORY_AND_DISK explicitly.
+    DISK_ONLY: a JVM never hands heap high-water back to the OS, so in a
+    long shared session every MEMORY_* materialization permanently
+    raises process RSS even after release — the sweep-killer observed in
+    round 5.  These frames are KB–MB sized and re-read within one query;
+    the OS page cache serves them at near-RAM speed without growing the
+    heap.
     """
-    if level is None:
-        level = _default_level()
-    out = df.persist(level)
-    if eager:
-        out.count()
+    out = df.persist(StorageLevel.DISK_ONLY)
+    out.count()
     _SCOPED.append(out)
     return out
 
 
-def scoped_persist_all(dfs: list[DataFrame],
-                       level: StorageLevel | None = None,
-                       max_workers: int = 2) -> list[DataFrame]:
+def scoped_persist_all(dfs: list[DataFrame]) -> list[DataFrame]:
     """Eagerly scoped-persist INDEPENDENT frames with their fill jobs
-    overlapped from a small driver thread pool (guide §2.6: actions are
+    overlapped from a 2-thread driver pool (guide §2.6: actions are
     only sequential because driver code calls them sequentially; a
     later job's tasks back-fill executors freed by the earlier job's
     stragglers).
@@ -130,14 +108,12 @@ def scoped_persist_all(dfs: list[DataFrame],
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    if level is None:
-        level = _default_level()
-    out = [df.persist(level) for df in dfs]
+    out = [df.persist(StorageLevel.DISK_ONLY) for df in dfs]
     _SCOPED.extend(out)
     if len(out) > 1:
         # a plain driver thread pool suffices for concurrent actions
         # (guide §2.6); FIFO scheduling gives the back-fill behaviour
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
+        with ThreadPoolExecutor(max_workers=2) as pool:
             list(pool.map(lambda df: df.count(), out))
     elif out:
         out[0].count()
@@ -193,9 +169,9 @@ def query_scope(fn):
 def material_scope():
     """Context manager bounding scoped-persist lifetimes for NON-registry
     consumers (tests, notebooks, library callers of e.g.
-    ``ngram_jaccard_pairs`` / ``minhash_lsh_pairs``, whose internal
-    ``track``/``scoped_persist`` calls otherwise append to the module
-    scope until the next top-level registry query drains it)::
+    ``minhash_lsh_pairs``, whose internal ``track``/``scoped_persist``
+    calls otherwise append to the module scope until the next top-level
+    registry query drains it)::
 
         with material_scope():
             pairs = minhash_lsh_pairs(docs).collect()

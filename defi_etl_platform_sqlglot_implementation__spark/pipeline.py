@@ -44,15 +44,15 @@ def lift_transactions(events: DataFrame) -> DataFrame:
 def run_batch(
     spark: SparkSession,
     events: DataFrame,
-    register_views: bool = True,
-    execute_sql: bool = True,
-    checksum: bool = True,
+    run_sql: bool = True,
 ) -> dict[str, DataFrame | str]:
     """Mirror of the reference run() contract (etl_pipeline.py:439-446):
     keys transfers / swaps / transactions / block_agg + the two canonical
     queries — here as live DataFrames (``transfer_volume`` /
-    ``swap_price_impact``) alongside their SQL texts."""
-    transfers = decode_transfers(events, checksum=checksum)
+    ``swap_price_impact``) alongside their SQL texts.  ``run_sql=False``
+    registers no temp views and runs neither query (a table-only job such
+    as the backfill)."""
+    transfers = decode_transfers(events)
     swaps = parse_swaps(events)
     tx = engineer_transactions(lift_transactions(events))
     block_agg = aggregate_by_block(tx)
@@ -66,13 +66,12 @@ def run_batch(
         "swap_sql": SWAP_PRICE_IMPACT_SQL,
     }
 
-    if register_views:
+    if run_sql:
         transfers.createOrReplaceTempView("token_transfers")
         swaps.createOrReplaceTempView("defi_swaps")
         tx.createOrReplaceTempView("transactions")
         block_agg.createOrReplaceTempView("block_agg")
-        if execute_sql:
-            out["transfer_volume"] = spark.sql(TRANSFER_VOLUME_SQL)
-            out["swap_price_impact"] = spark.sql(SWAP_PRICE_IMPACT_SQL)
+        out["transfer_volume"] = spark.sql(TRANSFER_VOLUME_SQL)
+        out["swap_price_impact"] = spark.sql(SWAP_PRICE_IMPACT_SQL)
 
     return out

@@ -12,9 +12,7 @@ a curation team actually reads:
   tokenizer-quality table), sharing the trained-encode CTE prefix with
   bpe_encode_segments.
 
-All four land INSIDE the r5 driver window (43 unproven entries lead the
-50 slots after `_ordered`'s new-bucket placement); locally oracle-exact
-at sf0.001/sf0.01/sf1.
+All four are locally oracle-exact at sf0.001/sf0.01/sf1.
 """
 
 from __future__ import annotations

@@ -36,7 +36,7 @@ def run_backfill(spark, input_path: str, output_dir: str, start_block: int,
         events = spark.read.schema(ENVELOPE).parquet(input_path)
 
     events = events.filter(F.col("block_number").between(start_block, end_block))
-    results = run_batch(spark, events, register_views=False, execute_sql=False)
+    results = run_batch(spark, events, run_sql=False)
 
     counts = {}
     for name in ("transfers", "swaps", "transactions", "block_agg"):

@@ -14,6 +14,7 @@ class TestBackfill:
         ]
         src = tmp_path / "input.jsonl"
         src.write_text("\n".join(msgs))
+        spark.catalog.dropTempView("token_transfers")
 
         counts = run_backfill(
             spark, str(src), str(tmp_path / "out"),
@@ -23,6 +24,8 @@ class TestBackfill:
         assert counts["transactions"] == 4
         assert counts["block_agg"] == 4
         assert counts["swaps"] == 0
+        # a table-only job: run_batch(run_sql=False) registers no views
+        assert not spark.catalog.tableExists("token_transfers")
 
         out = spark.read.parquet(str(tmp_path / "out" / "transfers"))
         blocks = {r["block_number"] for r in out.collect()}

@@ -1,55 +1,32 @@
-"""Driver-window accounting invariants for __spark_entry__._ordered:
-the verification priority is derived data (CORRECTNESS_r01–r07 union),
-and a stale name in either ledger silently wastes 50-slot window capacity
-— these checks make that failure loud at test time instead.
-
-Three ledgers:
-  _PRIORITY     — the pinned window head (unproven gates + _RECONFIRM).
-  _DRIVER_GREEN — green driver row exists AND implementation unchanged.
-  _RECONFIRM    — driver-green gates deliberately re-occupying window
-                  slots; must be EXACTLY the _PRIORITY ∩ _DRIVER_GREEN
-                  overlap, so a name can never sit ambiguously in both
-                  ledgers (the r7 bookkeeping failure)."""
+"""Driver-contract invariants for __spark_entry__: every registry module
+on disk is discovered, and the pinned 50-gate window (_PRIORITY) leads
+queries() verbatim, with oracle_sql() in the same order."""
 
 from __future__ import annotations
+
+from pathlib import Path
 
 import __spark_entry__ as entry
 
 
-def test_priority_and_green_names_resolve():
+def test_registry_modules_are_discovered():
     from defi_etl_platform_sqlglot_implementation__spark import registry
 
-    names = set(registry.QUERIES)
-    missing_priority = [n for n in entry._PRIORITY if n not in names]
-    missing_green = [n for n in entry._DRIVER_GREEN if n not in names]
-    missing_reconfirm = [n for n in entry._RECONFIRM if n not in names]
-    assert not missing_priority, missing_priority
-    assert not missing_green, missing_green
-    assert not missing_reconfirm, missing_reconfirm
-    # the ONLY allowed priority/green overlap is the explicit reconfirm
-    # ledger — anything else is the r7 double-bookkeeping bug
-    overlap = set(entry._PRIORITY) & entry._DRIVER_GREEN
-    assert overlap == set(entry._RECONFIRM), (
-        overlap ^ set(entry._RECONFIRM))
-    assert set(entry._RECONFIRM) <= set(entry._PRIORITY)
-    # no duplicate entries (dict-ordering would silently dedup)
-    assert len(entry._PRIORITY) == len(set(entry._PRIORITY))
-    assert len(entry._RECONFIRM) == len(set(entry._RECONFIRM))
+    pkg = Path(registry.__file__).parent
+    on_disk = {f"{registry.__package__}.{p.stem}" for p in pkg.glob("registry*.py")}
+    registered = {fn.__module__ for fn in registry.QUERIES.values()}
+    assert registered == on_disk, registered ^ on_disk
+    assert len(entry.queries()) == 305
+    assert len(entry.oracle_sql()) == 304
 
 
 def test_unproven_queries_lead_the_window():
     q = entry.queries()
-    ordered = list(q)
-    # the explicit priority bucket is the pinned window head, verbatim
-    pinned = [n for n in entry._PRIORITY if n in q]
-    assert ordered[:len(pinned)] == pinned
-    # after the pinned head: every unproven (implicit-new) query sorts
-    # before every remaining driver-green one
-    rest = ordered[len(pinned):]
-    n_unproven = len([n for n in rest if n not in entry._DRIVER_GREEN])
-    head, tail = rest[:n_unproven], rest[n_unproven:]
-    assert all(n not in entry._DRIVER_GREEN for n in head), head
-    assert all(n in entry._DRIVER_GREEN for n in tail)
+    missing = [n for n in entry._PRIORITY if n not in q]
+    assert not missing, missing
+    # no duplicate entries (dict-ordering would silently dedup)
+    assert len(entry._PRIORITY) == len(set(entry._PRIORITY)) == 50
+    assert list(q)[:50] == entry._PRIORITY
 
 
 def test_oracles_follow_query_order():
